@@ -22,8 +22,10 @@ Scale design (100 TB story):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from logspark.operators.textops import portable_hash60
@@ -140,7 +142,7 @@ def _make_minhash_kernel(coeffs: list[tuple[int, int]], k: int):
     here (BENCH/NOTES.md fix 7)."""
     _task_memo: dict[str, int] = {}  # fallback when logspark isn't importable
 
-    def kernel(s):
+    def kernel(s: pd.Series) -> pd.DataFrame:
         import hashlib
         import numpy as np
         import pandas as pd
@@ -216,8 +218,6 @@ def minhash_signatures(
     (doc, shingle) pair — at 100 TB that shuffle dwarfs the hashing. Docs
     with < k words have no shingles and are dropped (matching the explode
     form and the DuckDB oracle)."""
-    from pyspark.sql.pandas.functions import PandasUDFType
-
     coeffs = _minhash_coeffs(n_hashes)
     schema = ", ".join(f"mh_{i} bigint" for i in range(n_hashes))
     # asNondeterministic (r6, guide §4.4): the < k-token filter below
@@ -226,15 +226,13 @@ def minhash_signatures(
     # ArrowEvalPython nodes (every doc shingled+hashed twice, and every
     # consumer of sigs inherited both). The kernel is pure; the marker
     # only forbids Catalyst from re-evaluating/reordering it.
-    udf = F.pandas_udf(
-        _make_minhash_kernel(coeffs, k), schema, PandasUDFType.SCALAR
-    ).asNondeterministic()
+    udf = F.pandas_udf(_make_minhash_kernel(coeffs, k), schema).asNondeterministic()
     out = df.select(F.col(id_col), udf(F.col(text_col)).alias("_mh")).filter(
         F.col("_mh").getField("mh_0").isNotNull()
     )
-    for i in range(n_hashes):
-        out = out.withColumn(f"mh_{i}", F.col("_mh").getField(f"mh_{i}"))
-    return out.drop("_mh")
+    # one projection for every hash column (a withColumn per hash re-analyzes
+    # the growing plan n_hashes times)
+    return out.select(id_col, "_mh.*")
 
 
 def band_signatures(
@@ -315,14 +313,16 @@ def ngram_jaccard(
     quadratic in bucket size); with LSH `candidates` (a,b) it verifies only
     those — the scale path."""
     if candidates is not None:
-        # Materialize the candidate pair list ONCE (r6): it is referenced
-        # three times below (both sides of the id-set union + the
-        # intersection join), and its lineage is the full signature →
-        # banding → self-join chain; ReusedExchange only dedups identical
-        # exchange subtrees, not the post-exchange work, and the three
-        # consumers sit above different projections. The pair list is
-        # O(near-dups) rows — tiny — so the checkpoint is cheap at any
-        # corpus size.
+        # Materialize the candidate pair list ONCE: it is referenced three
+        # times below (both sides of the id-set union + the intersection
+        # join), and its lineage is the full signature → banding →
+        # self-join chain; ReusedExchange only dedups identical exchange
+        # subtrees, not the post-exchange work, and the three consumers
+        # sit above different projections. The pair list is O(near-dups)
+        # rows — tiny — so the checkpoint is cheap at any corpus size.
+        # This is the only checkpoint of the list: callers pass it
+        # un-materialized and the whole corpus (incremental_near_dup_pairs
+        # does), so the list is built once and the corpus pruned once.
         candidates = candidates.localCheckpoint(eager=True)
         # Shingle ONLY candidate-touched docs: per-doc shingles are
         # independent, so pruning the corpus to the (small) candidate id
@@ -397,9 +397,7 @@ def winnow_fingerprints(
     are interpreted per element — 103 s vs ~2 s for this kernel (same
     lesson as the minhash kernel, BENCH/NOTES.md fix 7). The portable
     md5-derived hash keeps the DuckDB oracle value-identical."""
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    udf = F.pandas_udf(_make_winnow_kernel(k, w), "array<bigint>", PandasUDFType.SCALAR)
+    udf = F.pandas_udf(_make_winnow_kernel(k, w), "array<bigint>")
     return df.select(
         F.col(id_col), F.explode(udf(F.col(text_col))).alias("fingerprint")
     )
@@ -412,7 +410,7 @@ def _make_winnow_kernel(k: int, w: int):
     dedup. No per-row Python beyond the gram join."""
     _task_memo: dict[str, int] = {}  # fallback when logspark isn't importable
 
-    def kernel(s):
+    def kernel(s: pd.Series) -> pd.Series:
         import hashlib
 
         import numpy as np
@@ -917,16 +915,17 @@ class SignatureStore:
             idx["partition_by"] = list(partition_by)
         self._write_index(idx)
 
-    def load(self, spark) -> DataFrame | None:
-        """All committed signatures, or None when the store is empty."""
+    def load(self, spark, schema: StructType | None = None) -> DataFrame | None:
+        """All committed signatures, or None when the store is empty.
+        Pass the signatures' `schema` (e.g. a new batch's) to skip
+        inference."""
         import os
 
         runs = self.committed_runs()
         if not runs:
             return None
-        return spark.read.parquet(
-            *[os.path.join(self.root, "runs", r) for r in runs]
-        )
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*[os.path.join(self.root, "runs", r) for r in runs])
 
     def load_runs_union(self, spark) -> DataFrame | None:
         """Per-run scans unioned by name — the load for PARTITIONED runs:
@@ -1038,7 +1037,7 @@ def incremental_near_dup_pairs(
     new_sigs = minhash_signatures(new_docs, id_col, text_col, n_hashes, k).localCheckpoint(
         eager=True
     )
-    old_sigs = store.load(new_docs.sparkSession)
+    old_sigs = store.load(new_docs.sparkSession, schema=new_sigs.schema)
 
     if replay:
         # crash replay AFTER the store commit: these docs' signatures are
@@ -1069,21 +1068,12 @@ def incremental_near_dup_pairs(
             F.greatest(F.col(f"l.{id_col}"), F.col(f"r.{id_col}")).alias("b"),
         )
         .distinct()
-        # materialize the tiny candidate list once (r6): it feeds the
-        # touched-docs semi-join (two union branches) and the verify —
-        # without this each consumer re-runs the store-scan + banding join
-        .localCheckpoint(eager=True)
     )
-
-    touched = corpus.join(
-        pairs.select(F.col("a").alias(id_col))
-        .union(pairs.select(F.col("b").alias(id_col)))
-        .distinct(),
-        id_col,
-        "leftsemi",
-    )
+    # ngram_jaccard materializes the candidate list once and prunes the
+    # corpus to the candidate-touched docs once; both happen eagerly here,
+    # before the store append below.
     verified = ngram_jaccard(
-        touched, id_col, text_col, k, threshold=threshold, candidates=pairs
+        corpus, id_col, text_col, k, threshold=threshold, candidates=pairs
     )
     if not replay:
         store.append(new_sigs, run_id, input_files=input_files)

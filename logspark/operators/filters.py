@@ -27,7 +27,7 @@ from pyspark.sql.types import (
 
 from logspark.functions.predicates import compile_predicate
 from logspark.functions.templates import compile_template
-from logspark.grok import compile_grok, compile_grok_java
+from logspark.grok import JAVA_FLAGS, compile_grok, compile_grok_java
 
 GROK_FAILURE_TAG = "_grokparsefailure"
 JSON_FAILURE_TAG = "_jsonparsefailure"
@@ -121,10 +121,16 @@ def grok_filter(df: DataFrame, cfg: dict) -> DataFrame:
         raise ValueError(f"unknown grok engine {engine!r}")
     if engine in ("auto", "native"):
         jpatterns = compile_grok_java(list(match), patterns, anchor)
+        # The native engine writes its regexes into SQL string literals,
+        # which this deprecated parser mode takes without unescaping.
+        legacy = df.sparkSession.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        if jpatterns is not None and legacy.lower() == "true":
+            jpatterns = None
         if jpatterns is None and engine == "native":
             raise ValueError(
                 "grok engine='native' but the pattern set is not JVM-expressible "
-                "(optional/alternated capture group, backreference, or literal '{')"
+                "(optional/alternated capture group, backreference, or literal '{') "
+                "or spark.sql.parser.escapedStringLiterals is on"
             )
         if jpatterns is not None:
             return _grok_native(df, cfg, source, schema, jpatterns, failure_tag)
@@ -202,17 +208,12 @@ def _grok_native(
     # regexp_replace PER FIELD per row, 2-3x slower than the pandas UDF.
     # As named non-cheap multi-referenced columns, CollapseProject keeps
     # them in their own Project (SPARK-36718) → one evaluation per row.
-    tmp: list[str] = []
-    ms: list[F.Column] = []
-    for i, p in enumerate(jpatterns):
-        mc = f"_gm{i}"
-        df = df.withColumn(mc, src.rlike(p.regex))
-        ms.append(F.col(mc))
-        tmp.append(mc)
+    ms = [f"_gm{i}" for i in range(len(jpatterns))]
+    df = df.withColumns({m: src.rlike(p.regex) for m, p in zip(ms, jpatterns)})
 
-    parts: list[F.Column | None] = []
+    parts: dict[str, F.Column] = {}  # _gp{i}: pattern i's capture vector
     for i, p in enumerate(jpatterns):
-        if len(p.captures) >= 2:
+        if len(p.captures) >= 2:  # 0/1 captures: direct regexp_extract is optimal
             repl = _GROK_DELIM.join(f"${c.gidx}" for c in p.captures)
             # consume the whole string so the replacement IS the whole
             # result: [\s\S]* swallows the unmatched tail (and, for
@@ -220,51 +221,72 @@ def _grok_native(
             # perturbing capture values — it always succeeds on whatever
             # the original pattern left over. The (?d) UNIX_LINES flag must
             # stay at position 0 (it applies from where it appears).
-            from logspark.grok import JAVA_FLAGS
-
             body = p.regex.removeprefix(JAVA_FLAGS)
             consume = body + r"[\s\S]*"
             if not body.startswith("^"):
                 consume = r"[\s\S]*?" + consume
             consume = JAVA_FLAGS + consume
-            pc = f"_gp{i}"
-            df = df.withColumn(
-                pc,
-                F.split(F.when(ms[i], F.regexp_replace(src, consume, repl)), _GROK_DELIM),
+            parts[f"_gp{i}"] = F.split(
+                F.when(F.col(ms[i]), F.regexp_replace(src, consume, repl)), _GROK_DELIM
             )
-            parts.append(F.col(pc))
-            tmp.append(pc)
-        else:
-            parts.append(None)  # 0/1 captures: direct regexp_extract is optimal
+    if parts:
+        df = df.withColumns(parts)
+    tmp = ms + list(parts)
+
+    # Each field is one CASE over the patterns, first match wins, written as
+    # SQL text: one F.expr per field instead of a py4j call per operator.
+    src_sql = _sql_ident(source)
+
+    def field_sql(field: StructField) -> str:
+        value = "CAST(NULL AS STRING)"
+        for i in reversed(range(len(jpatterns))):
+            p = jpatterns[i]
+            pos = next((j for j, c in enumerate(p.captures) if c.name == field.name), None)
+            if pos is None:
+                v = "CAST(NULL AS STRING)"
+            else:
+                v = f"regexp_extract({src_sql}, {_sql_string(p.regex)}, {p.captures[pos].gidx})"
+                pc = f"_gp{i}"
+                if pc in parts:
+                    v = (
+                        f"CASE WHEN size({pc}) = {len(p.captures)} "
+                        f"THEN element_at({pc}, {pos + 1}) ELSE {v} END"
+                    )
+            value = f"CASE WHEN {ms[i]} THEN {v} ELSE {value} END"
+        if isinstance(field.dataType, LongType):
+            value = f"try_cast({value} AS BIGINT)"
+        elif isinstance(field.dataType, DoubleType):
+            value = f"try_cast({value} AS DOUBLE)"
+        return value
 
     matched = F.lit(False)
     for m in reversed(ms):
-        matched = F.when(m, F.lit(True)).otherwise(matched)
-
-    for field in schema.fields[:-1]:  # last field is _grok_matched
-        name = field.name
-        value = F.lit(None).cast("string")
-        for m, p, pa in zip(reversed(ms), reversed(jpatterns), reversed(parts)):
-            pos = next((j for j, c in enumerate(p.captures) if c.name == name), None)
-            if pos is None:
-                v = F.lit(None).cast("string")
-            elif pa is None:
-                v = F.regexp_extract(src, p.regex, p.captures[pos].gidx)
-            else:
-                v = F.when(
-                    F.size(pa) == len(p.captures), F.element_at(pa, pos + 1)
-                ).otherwise(F.regexp_extract(src, p.regex, p.captures[pos].gidx))
-            value = F.when(m, v).otherwise(value)
-        if isinstance(field.dataType, LongType):
-            value = value.try_cast("long")
-        elif isinstance(field.dataType, DoubleType):
-            value = value.try_cast("double")
-        df = df.withColumn(name, value)
-
+        matched = F.when(F.col(m), F.lit(True)).otherwise(matched)
     new_tags = F.when(matched, add_tags(F.col("tags"), cfg.get("add_tag", []))).otherwise(
         add_tags(F.col("tags"), [failure_tag])
     )
-    return df.withColumn("tags", new_tags).drop(*tmp)
+
+    # Fields are assigned in schema order with sequential-withColumn
+    # semantics: a capture that takes the name of a column a later
+    # expression reads (the source, `tags`, a temporary) closes the batch,
+    # so the later expressions see the capture.
+    read_later = {source, "tags", *tmp}
+    batch: dict[str, F.Column] = {}
+    for field in schema.fields[:-1]:  # last field is _grok_matched
+        batch[field.name] = F.expr(field_sql(field))
+        if field.name in read_later:
+            df = df.withColumns(batch)
+            batch = {}
+    batch["tags"] = new_tags
+    return df.withColumns(batch).drop(*tmp)
+
+
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 # ---------------------------------------------------------------------------

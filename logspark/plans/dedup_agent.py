@@ -26,12 +26,21 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from logspark.operators.dedup import SignatureStore, incremental_near_dup_pairs
 from logspark.plans.pipeline import WriterLock
 from logspark.sources import manifest as mf
 from logspark.sources.tableio import ParquetIO
+
+
+def _write_pairs(pairs: DataFrame, path: str) -> int:
+    """Overwrite `path` with `pairs`; return the number of rows written,
+    observed on the write itself instead of read back."""
+    obs = Observation("pairs")
+    pairs.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return obs.get["n"]
 
 
 def dedup_tick(
@@ -87,13 +96,15 @@ def dedup_tick(
         if not store.files_complete():
             needed |= manifest.processed_files
         corpus = io.read_files(spark, table, sorted(needed & set(all_files) | set(pending)))
+        # one schema inference per tick: the batch reads reuse the corpus's
+        schema = corpus.schema
 
         parts = []
         if already:
             parts.append(
                 incremental_near_dup_pairs(
                     store,
-                    io.read_files(spark, table, already),
+                    io.read_files(spark, table, already, schema=schema),
                     corpus,
                     run_id=None,
                     threshold=threshold,
@@ -107,7 +118,7 @@ def dedup_tick(
             parts.append(
                 incremental_near_dup_pairs(
                     store,
-                    io.read_files(spark, table, fresh),
+                    io.read_files(spark, table, fresh, schema=schema),
                     corpus,
                     run_id=rid,
                     threshold=threshold,
@@ -120,9 +131,7 @@ def dedup_tick(
         pairs = parts[0]
         for p in parts[1:]:
             pairs = pairs.unionByName(p).dropDuplicates(["a", "b"])
-        out = os.path.join(sink_root, "runs", rid, "pairs")
-        pairs.write.mode("overwrite").parquet(out)
-        n_pairs = spark.read.parquet(out).count()
+        n_pairs = _write_pairs(pairs, os.path.join(sink_root, "runs", rid, "pairs"))
         # Observability for the legacy crash window (ADVICE r5 low): when
         # store provenance is incomplete, signatures may belong to files
         # in neither the pending set nor the manifest — their candidate
@@ -241,9 +250,7 @@ def embed_dedup_tick(
         pairs = parts[0]
         for p in parts[1:]:
             pairs = pairs.unionByName(p).dropDuplicates(["a", "b"])
-        out = os.path.join(sink_root, "runs", rid, "pairs")
-        pairs.write.mode("overwrite").parquet(out)
-        n_pairs = spark.read.parquet(out).count()
+        n_pairs = _write_pairs(pairs, os.path.join(sink_root, "runs", rid, "pairs"))
         mf.commit_run(sink_root, mf.RunRecord(run_id=rid, input_files=pending))
         return {
             "run_id": rid,

@@ -3,8 +3,11 @@
     PipelineConfig
       → build(): scan → filter chain → enrich joins → router
                  (ALL narrow — one stage, no shuffle before the sinks)
-      → run():   one partitioned sink write + one per-sink-counts aggregate,
-                 observation + accumulator metrics, resume manifest commit.
+      → run():   the partitioned sink write (observing rows_in, parse
+                 failures and per-sink row counts on the way), the
+                 (sink, conv_id, bucket) counts aggregate over the written
+                 sink, then the resume manifest commit. No job reads a
+                 result back.
 
 Scale notes (the 100 TB story):
 - Everything before the write/agg is a single narrow stage: parquet/Iceberg
@@ -334,22 +337,30 @@ def _run_locked(
             "sink",
             F.pmod(F.hash("conv_id"), F.lit(int(fps))),
         )
+    # Per-sink row counts are observed on the routed write itself: one
+    # conditional sum per configured sink, in the write's own result stage
+    # (after any repartition), so a retried task counts once and no job
+    # reads the sink back.
+    sinks = [o["name"] for o in cfg.output]
+    sink_obs = Observation("sinks")
+    routed_out = routed_out.observe(
+        sink_obs,
+        *[F.sum((F.col("sink") == F.lit(s)).cast("long")).alias(f"s{i}") for i, s in enumerate(sinks)],
+    )
     routed_out.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
     # Counts come from the WRITTEN sink, not a recomputation: the parse→route
     # stage runs exactly once, and the (sink, conv_id, ts)-only re-read is a
     # column-pruned parquet scan — tiny next to the parse cost. This also
-    # makes the counts describe what physically landed in each sink.
+    # makes the counts describe what physically landed in each sink. The
+    # re-read takes the routed schema, so it starts no inference job.
     counts_path = os.path.join(sink_root, "runs", run_id, "sink_counts")
-    written = spark.read.parquet(routed_path)
+    written = spark.read.schema(bp.routed.schema).parquet(routed_path)
     sink_counts(written, bucket=cfg.aggregate.get("bucket", "hour")).write.mode(
         "overwrite"
     ).parquet(counts_path)
 
-    per_sink = {
-        r["sink"]: r["n"]
-        for r in spark.read.parquet(counts_path).groupBy("sink").agg(F.sum("n").alias("n")).collect()
-    }
-    result.sink_rows = {k: int(v) for k, v in per_sink.items()}
+    observed = sink_obs.get
+    result.sink_rows = {s: int(observed[f"s{i}"]) for i, s in enumerate(sinks) if observed[f"s{i}"]}
     if bp.observation is not None:
         result.metrics.update({k: float(v) for k, v in bp.observation.get.items()})
 

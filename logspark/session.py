@@ -41,7 +41,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # default to the CPUs this process may run on, not a tuning host's count
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     builder = SparkSession.builder.master(master).appName(app_name)
     conf = dict(ENGINE_CONF)

@@ -21,6 +21,11 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Any user schema skips parquet schema inference (a footer-reading Spark
+# job); a file listing does not depend on the columns.
+_LISTING_SCHEMA = StructType([])
 
 
 @dataclass
@@ -36,11 +41,20 @@ class ParquetIO:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self._path(table))
 
-    def read_files(self, spark: SparkSession, table: str, files: list[str]) -> DataFrame:
-        return spark.read.parquet(*files)
+    def read_files(
+        self,
+        spark: SparkSession,
+        table: str,
+        files: list[str],
+        schema: StructType | None = None,
+    ) -> DataFrame:
+        """Read exactly `files`. Pass the `schema` of an earlier read of the
+        same table to skip inference."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*files)
 
     def input_files(self, spark: SparkSession, table: str) -> list[str]:
-        return sorted(self.read(spark, table).inputFiles())
+        return sorted(spark.read.schema(_LISTING_SCHEMA).parquet(self._path(table)).inputFiles())
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
         w = df.write.mode(mode)

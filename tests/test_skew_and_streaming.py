@@ -183,9 +183,14 @@ def test_push_source_rate_stream(spark, tmp_path, dims):
         spark, canonical_config(), None, sink_root, str(tmp_path / "ckpt"),
         dims=dims, available_now=False, source=src,
     )
+    # The rate source never runs dry, so processAllAvailable() would chase
+    # its growing backlog; stop once one batch with rows has committed.
     try:
-        time.sleep(4)
-        q.processAllAvailable()
+        deadline = time.monotonic() + 120
+        while not any(p["numInputRows"] > 0 for p in q.recentProgress):
+            assert q.exception() is None, q.exception()
+            assert time.monotonic() < deadline, "no batch with rows committed in 120 s"
+            time.sleep(0.5)
     finally:
         q.stop()
     routed = spark.read.parquet(f"{sink_root}/routed")

@@ -1074,6 +1074,8 @@ def test_embed_dedup_agent_ticks_equal_one_shot(spark, emb, tmp_path):
     r2 = dedup_agent.embed_dedup_tick(spark, io, "vecs", sink, threshold=0.35)
     assert r2["run_id"] != r1["run_id"]
     assert any(f.endswith("f1.parquet") for f in r2["replayed_files"])
+    # the observed pair count equals the pairs written
+    assert r2["n_pairs"] == spark.read.parquet(os.path.join(sink, "runs", r2["run_id"], "pairs")).count()
 
     store = SignatureStore(os.path.join(sink, "vstore"))
     rows = store.load_runs_union(spark).groupBy("vec_id", "cell").count().collect()
